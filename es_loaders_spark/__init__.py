@@ -13,6 +13,7 @@ Re-expresses the capabilities of the reference repo ``shahcompbio/es-loaders``
 - ``merge``      global sort-merge of postings with hot-term salting
 - ``wand``       block-max WAND top-k query engine over the compressed index
 - ``phrase``     index-backed positional phrase queries
+- ``resources``  the engine's cross-call Spark caches and aux thread pool
 - ``deletes``    tombstone deletes, live-docs filtering, compaction
 - ``dsl``        ES Query-DSL adapter (the reference's verbatim JSON bodies)
 - ``catalog``    Iceberg-shaped manifest catalog (atomic snapshot commits)

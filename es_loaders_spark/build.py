@@ -26,6 +26,7 @@ import time
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -34,6 +35,7 @@ from pyspark.sql.window import Window
 from .analyze import tokenize_texts
 from .catalog import ManifestCatalog, PartitionEntry
 from .codec import encode_blocks_flat  # used in _build_shard_fn
+from .resources import AUX_POOL, ID_ASSIGNMENTS
 
 # FLAT index layout: one row per posting block. Nested array<struct>
 # was ~10× slower through Arrow (per-block Python dicts); flat rows are
@@ -78,6 +80,7 @@ INDEX_FORMAT = 2
 # + chunk_idx. 4096 chunks × 3k docs ≈ 12M docs per 128MB split — far past
 # any real file; the last chunk absorbs overflow rather than wrapping.
 _ALIGN_STRIDE = 4096
+_ALIGN_CHUNK_DOCS = 3000  # docs per sub-shard (see the aligned build path)
 
 
 def load_stats(index_dir: str) -> dict:
@@ -123,25 +126,34 @@ def assign_doc_ids(docs: DataFrame, url_col: str = "url") -> DataFrame:
     # subtree — on an opaque source (mapInPandas synthesis, a UDF-derived
     # column) that is TWO full passes for one assignment. The cache holds
     # just the projected url rows and is dropped as soon as the offsets
-    # job has materialized the range-partitioned copy below.
-    src = docs.persist()
-    parted = (
-        src.repartitionByRange(
-            max(docs.sparkSession.sparkContext.defaultParallelism, 2), F.col(url_col)
+    # job has materialized the range-partitioned copy below. A caller's
+    # own cache already serves both jobs and stays the caller's.
+    owns_src = docs.storageLevel == StorageLevel.NONE
+    src = docs.persist() if owns_src else docs
+    try:
+        parted = (
+            src.repartitionByRange(
+                max(spark.sparkContext.defaultParallelism, 2), F.col(url_col)
+            )
+            .withColumn("_pid", F.spark_partition_id())
+            # persist is REQUIRED for correctness, not a cache hint: the
+            # offsets job and the consuming job must see the SAME
+            # range-partition membership (re-evaluating repartitionByRange
+            # re-samples boundaries and AQE may re-plan, yielding
+            # duplicate/unstable ids). In production the assignment is
+            # materialized once to a table at ingest (SURVEY §1.4) —
+            # callers should write the result out and read it back rather
+            # than keep recomputing this plan.
+            .persist()
         )
-        .withColumn("_pid", F.spark_partition_id())
-        # persist is REQUIRED for correctness, not a cache hint: the offsets
-        # job and the consuming job must see the SAME range-partition
-        # membership (re-evaluating repartitionByRange re-samples boundaries
-        # and AQE may re-plan, yielding duplicate/unstable ids). In
-        # production the assignment is materialized once to a table at
-        # ingest (SURVEY §1.4) — callers should write the result out and
-        # read it back rather than keep recomputing this plan.
-        .persist()
-    )
-    counts = parted.groupBy("_pid").count().collect()
-    # parted is materialized now; consumers read ITS cache, never src
-    src.unpersist()
+        # registered first, so release_doc_id_caches() frees it even if
+        # the offsets job fails
+        ID_ASSIGNMENTS.put(id(parted), parted, spark.sparkContext)
+        counts = parted.groupBy("_pid").count().collect()
+    finally:
+        # parted is materialized now; consumers read ITS cache, never src
+        if owns_src:
+            src.unpersist()
     offsets = {}
     acc = 0
     for row in sorted(counts, key=lambda r: r["_pid"]):
@@ -158,36 +170,9 @@ def assign_doc_ids(docs: DataFrame, url_col: str = "url") -> DataFrame:
         .withColumn("doc_id", F.col("_offset") + local_rank)
         .drop("_pid", "_offset")
     )
-    # register the internal persist so callers can release it once the ids
-    # are materialized — release_doc_id_caches() survives any DataFrame
-    # transformation, unlike an attribute on `out` (a blanket
-    # catalog.clearCache() would also evict UNRELATED caches the
-    # application holds — measured 2.7× on a cached downstream query in
-    # BENCH.md r4). The attribute stays as a per-result handle.
-    _ID_PERSISTS.append(parted)
+    # per-result handle for release_doc_id_caches(result)
     out._persisted_source = parted
     return out
-
-
-_ID_PERSISTS: list[DataFrame] = []
-
-# Shared driver-side thread pool for overlapping INDEPENDENT Spark jobs
-# inside a build (corpus-stats agg vs the posting write; the lineage
-# aggregates vs the terms-table build — guide §2.6). Module-level and
-# lazily created: no per-build executor churn, nothing to shut down on
-# error paths (an orphaned future is just a Spark job that completes).
-_AUX_POOL = None
-
-
-def _aux_pool():
-    global _AUX_POOL
-    if _AUX_POOL is None:
-        from concurrent.futures import ThreadPoolExecutor
-
-        _AUX_POOL = ThreadPoolExecutor(
-            max_workers=4, thread_name_prefix="build-aux"
-        )
-    return _AUX_POOL
 
 
 def _build_terms_table(spark, shards_dir: str, terms_dir: str) -> tuple[int, int]:
@@ -233,12 +218,9 @@ def release_doc_id_caches(result: DataFrame | None = None) -> None:
                 "call release_doc_id_caches() with no arguments to "
                 "release every outstanding assignment"
             )
-        parted.unpersist()
-        # identity, not ==: DataFrame __eq__ builds a Column
-        _ID_PERSISTS[:] = [p for p in _ID_PERSISTS if p is not parted]
+        ID_ASSIGNMENTS.pop(id(parted))
         return
-    while _ID_PERSISTS:
-        _ID_PERSISTS.pop().unpersist()
+    ID_ASSIGNMENTS.clear()
 
 
 def _require_string_routing(docs, routing_field: str) -> None:
@@ -606,7 +588,6 @@ def build_index(
     # Submitted from a driver thread so it overlaps the posting build's
     # job (guide §2.6: independent jobs back-fill each other's tails);
     # the result is only consumed after both complete. ---
-    pool = _aux_pool()
     stats_future = None
     if prior is not None:
         stats = prior
@@ -641,7 +622,7 @@ def build_index(
                 "routing_field": routing_field,
             }
 
-        stats_future = pool.submit(_stats_job)
+        stats_future = AUX_POOL.submit(_stats_job)
 
     # --- stage 2: per-shard posting build — THE one heavy pass over text.
     # One shuffle by shard; the UDF tokenizes once, emits posting blocks,
@@ -662,12 +643,11 @@ def build_index(
             # zero-shuffle path: shards are carved out of each scan split
             # in-task. A split can be arbitrarily fat (128 MB parquet files
             # at 100 TB), so the task STREAMS its Arrow batches and cuts a
-            # sub-shard every ALIGN_CHUNK_DOCS docs — kernel group size
+            # sub-shard every _ALIGN_CHUNK_DOCS docs — kernel group size
             # stays at the measured sweet spot (~3k docs; a 28k-doc group
             # regressed 15× under allocator/GC pressure), and task memory
             # is bounded by one chunk, not the split. Sub-shard id =
             # split_id * stride + chunk_idx.
-            chunk_docs = int(os.environ.get("SPARK_GRAFT_ALIGN_CHUNK_DOCS", "3000"))
             stride = _ALIGN_STRIDE
 
             allowed = frozenset(missing)
@@ -710,11 +690,11 @@ def build_index(
                         # APPENDING and concat once at flush (a concat per
                         # batch over the growing tail would be O(n²) copy)
                         continue
-                    while n >= chunk_docs and sub < stride - 1:
+                    while n >= _ALIGN_CHUNK_DOCS and sub < stride - 1:
                         cat = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-                        yield cut(cat.iloc[:chunk_docs], sub)
+                        yield cut(cat.iloc[:_ALIGN_CHUNK_DOCS], sub)
                         sub += 1
-                        rest = cat.iloc[chunk_docs:]
+                        rest = cat.iloc[_ALIGN_CHUNK_DOCS:]
                         buf = [rest] if len(rest) else []
                         n = len(rest)
                 if n:
@@ -783,12 +763,12 @@ def build_index(
                 .collect()
             }
 
-        lineage_f = pool.submit(_lineage_job)
-        docs_per_shard_f = pool.submit(_docs_per_shard_job)
+        lineage_f = AUX_POOL.submit(_lineage_job)
+        docs_per_shard_f = AUX_POOL.submit(_docs_per_shard_job)
         terms_dir = os.path.join(index_dir, "terms")
         terms_f = None
         if not cat.committed_partitions("terms", "terms"):
-            terms_f = pool.submit(
+            terms_f = AUX_POOL.submit(
                 _build_terms_table, spark, shards_dir, terms_dir
             )
         lineage = lineage_f.result()
@@ -1086,7 +1066,7 @@ def append_documents(
         spark.sparkContext.setJobDescription("append_documents: terms table")
         tdf.write.mode("overwrite").parquet(terms_dir)
 
-    terms_f = _aux_pool().submit(_terms_write)
+    terms_f = AUX_POOL.submit(_terms_write)
     # the corpus-stats aggregate (when not already folded into the shard
     # lineage above) overlaps the terms recompute; BOTH complete before
     # the stats.json visibility point below

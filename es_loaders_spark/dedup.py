@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .analyze import terms_array
+from .resources import DEDUP_PERSISTS
 from .textstats import fingerprint
 
 # --- exact -----------------------------------------------------------------
@@ -190,46 +191,14 @@ def ngram_jaccard_pairs(
 
 # --- pipeline cache discipline ----------------------------------------------
 
-# The LSH pipeline persists two corpus-derived relations (signatures, shingle
-# sets) that its own downstream joins reference multiple times. The pool is
-# BOUNDED, oldest-released-first (r7; previously each new invocation dropped
-# the previous one's caches): keeping recent entries alive means a REPEATED
-# pipeline over the same input gets plan-matched cache hits — warm
-# steady-state serving, the _WarmIndex LRU philosophy — while the cap keeps
-# long sessions from accumulating. A released invocation's DataFrame stays
-# correct afterwards; it just recomputes if re-collected.
-from collections import OrderedDict
-
-_TRACKED_PERSISTS: "OrderedDict[int, DataFrame]" = OrderedDict()
-_MAX_TRACKED = 4
-
-
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    # Keyed by the analyzed plan's semantic hash: a REPEATED pipeline
-    # re-registers the same relation instead of adding a duplicate whose
-    # LRU eviction would (plan-matched) uncache the live entry. Storage
-    # is serialized (PySpark MEMORY_AND_DISK): compact blocks while the
-    # cache idles between reuses — less heap/GC drag on the unrelated
-    # queries running in between.
-    h = df._jdf.queryExecution().analyzed().semanticHash()
-    if h in _TRACKED_PERSISTS:
-        _TRACKED_PERSISTS.move_to_end(h)
-        return df  # the existing cached relation serves this plan
-    from pyspark import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _TRACKED_PERSISTS[h] = df
-    while len(_TRACKED_PERSISTS) > _MAX_TRACKED:
-        _TRACKED_PERSISTS.popitem(last=False)[1].unpersist()
-    return df
-
 
 def release_dedup_caches() -> None:
-    """Unpersist the relations the dedup pipelines keep cached for their
-    own multi-reference joins and warm re-serving; call explicitly to
-    free cluster memory after the last dedup action of a session."""
-    while _TRACKED_PERSISTS:
-        _TRACKED_PERSISTS.popitem(last=False)[1].unpersist()
+    """Unpersist the relations (signatures, shingle sets) the LSH pipelines
+    keep in the bounded ``resources.DEDUP_PERSISTS`` pool for their own
+    multi-reference joins and for plan-matched hits when a pipeline is
+    repeated; call explicitly to free cluster memory after the last dedup
+    action of a session."""
+    DEDUP_PERSISTS.clear()
 
 
 # --- MinHash + LSH -----------------------------------------------------------
@@ -365,7 +334,7 @@ def minhash_lsh_pairs(
     band's raw signature values) for the oracle gate.
     """
     assert num_hashes % bands == 0
-    sig = _persist_tracked(minhash_signatures(df, n, num_hashes, seed, text_col, portable))
+    sig = DEDUP_PERSISTS.persist(minhash_signatures(df, n, num_hashes, seed, text_col, portable))
     cand = _lsh_candidates(sig, num_hashes, bands, portable, max_bucket)
     sa = sig.select(F.col("doc_id").alias("a"), F.col("sig").alias("sig_a"))
     sb = sig.select(F.col("doc_id").alias("b"), F.col("sig").alias("sig_b"))
@@ -519,8 +488,8 @@ def lsh_verified_pairs(
     # verification joins reference it twice (set_a, set_b) — measured
     # ~30% off the pipeline at sf0.1; this invocation holds exactly
     # {hsets, sig}.
-    hsets = _persist_tracked(hashed_shingle_sets(df, n, text_col))
-    sig = _persist_tracked(minhash_signatures_from_hashed(hsets, num_hashes, seed))
+    hsets = DEDUP_PERSISTS.persist(hashed_shingle_sets(df, n, text_col))
+    sig = DEDUP_PERSISTS.persist(minhash_signatures_from_hashed(hsets, num_hashes, seed))
     cand = _lsh_candidates(sig, num_hashes, bands, portable=False, max_bucket=max_bucket)
     return exact_jaccard_for_pairs(cand, hsets, set_col="hs64").filter(
         F.col("jaccard") >= threshold

@@ -52,9 +52,12 @@ import json
 import re
 from typing import Any
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from .resources import QUERY_PERSISTS
 
 
 # ES GeoUtils.EARTH_MEAN_RADIUS — the radius Lucene's haversin uses, so
@@ -1715,7 +1718,8 @@ def _proximity_docs(
     if index_dir is not None and serve != "scan":
         from .phrase import positional_postings
 
-        pp = positional_postings(spark, index_dir, sorted(set(terms))).cache()
+        pp = positional_postings(spark, index_dir, sorted(set(terms)))
+        pp = QUERY_PERSISTS.persist(pp, StorageLevel.MEMORY_AND_DISK_DESER)
         legs = [
             pp.filter(F.col("term") == t).select(
                 "doc_id", F.explode("positions").alias(f"p{i}")

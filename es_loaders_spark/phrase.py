@@ -26,11 +26,13 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .analyze import tokenize_text
 from .codec import decode_blocks_flat_batch, decode_positions_flat_batch
+from .resources import QUERY_PERSISTS
 
 
 def positional_postings(
@@ -190,7 +192,8 @@ def phrase_docs(
     terms = [t for _, t in qtoks]
     pp = positional_postings(spark, index_dir, sorted(set(terms)), table)
     if len(set(terms)) > 1:
-        pp = pp.cache()  # one decode pass shared by all phrase-term filters
+        # one decode pass shared by all phrase-term filters
+        pp = QUERY_PERSISTS.persist(pp, StorageLevel.MEMORY_AND_DISK_DESER)
     cur = pp.filter(F.col("term") == terms[0]).select(
         "doc_id", F.col("positions").alias("cur")
     )
@@ -282,7 +285,7 @@ def phrase_prefix_docs(
         spark, index_dir, sorted(set(head_terms) | set(exps)), table
     )
     if head or len(exps) > 1:
-        pp = pp.cache()
+        pp = QUERY_PERSISTS.persist(pp, StorageLevel.MEMORY_AND_DISK_DESER)
     if not head:
         return filter_deleted(
             spark, index_dir,

@@ -71,52 +71,17 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .analyze import SPLIT_RE_DUCKDB, tokenize_text
+from .resources import AUX_POOL, QUERY_PERSISTS
 
 MUST, SHOULD, MUST_NOT = "MUST", "SHOULD", "MUST_NOT"
 MAX_LEAVES = 32  # joined leaf columns; beyond this the query is degenerate
 
-# Bounded pool of tracked persists (the _WarmIndex LRU philosophy
-# applied to query-derived relations): the fast scan path caches ONE
-# small projected relation per query — (doc_id, dl, query-relevant
-# tokens) — that several leaf subplans reference, and phrase serving
-# caches the decoded positional postings. Entries outlive the query so
-# a REPEATED identical query gets a plan-matched cache hit (warm
-# steady-state serving — the same reuse the exact-scorer suite relies
-# on); the pool is capped, oldest-released-first, so long sessions
-# never accumulate unboundedly. A released query's DataFrame stays
-# correct (it just recomputes if re-collected).
-from collections import OrderedDict
-
-_TRACKED_PERSISTS: "OrderedDict[int, DataFrame]" = OrderedDict()
-_MAX_TRACKED = 16
-
-
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    # Keyed by the analyzed plan's semantic hash: a REPEATED query
-    # re-registers the same relation instead of adding a duplicate whose
-    # LRU eviction would (plan-matched) uncache the live entry. Storage
-    # is serialized (PySpark MEMORY_AND_DISK): compact blocks while the
-    # cache idles between reuses — less heap/GC drag on the unrelated
-    # queries running in between.
-    h = df._jdf.queryExecution().analyzed().semanticHash()
-    if h in _TRACKED_PERSISTS:
-        _TRACKED_PERSISTS.move_to_end(h)
-        return df  # the existing cached relation serves this plan
-    from pyspark import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _TRACKED_PERSISTS[h] = df
-    while len(_TRACKED_PERSISTS) > _MAX_TRACKED:
-        _TRACKED_PERSISTS.popitem(last=False)[1].unpersist()
-    return df
-
 
 def release_query_string_caches() -> None:
-    """Unpersist the relations execute_tree keeps cached for its own
-    multi-reference leaf joins and warm re-serving; call explicitly to
-    free memory after the last query of a session."""
-    while _TRACKED_PERSISTS:
-        _TRACKED_PERSISTS.popitem(last=False)[1].unpersist()
+    """Unpersist what query_string, phrase and span queries keep cached
+    (``resources.QUERY_PERSISTS``) for their multi-reference joins and warm
+    re-serving; call after the last query of a session to free memory."""
+    QUERY_PERSISTS.clear()
 
 
 @dataclass
@@ -673,7 +638,7 @@ def execute_tree(
         rel_cols = [F.col("doc_id"), F.size("_toks").alias("dl")]
         if tok_conds:
             rel_cols.append(F.filter(F.col("_toks"), _tok_pred).alias("_ftoks"))
-        rel = _persist_tracked(
+        rel = QUERY_PERSISTS.persist(
             base_proj.select(*rel_cols, *[F.col(f"_kw_{f}") for f in kw_fields])
         )
         # ONE action computes corpus stats AND every keyword df (the
@@ -810,15 +775,13 @@ def execute_tree(
     # the phrase-df count and broadcast-build jobs below (guide §2.6)
     kw_row_f = None
     if kw_leaves and not fast_scan:
-        from .build import _aux_pool
-
         cnt_exprs = [F.count(F.lit(1)).alias("_n")] + [
             F.sum(
                 F.when(F.col(l.field) == F.lit(l.value), 1).otherwise(0)
             ).alias(f"_d{l.id}")
             for l in kw_leaves
         ]
-        kw_row_f = _aux_pool().submit(docs.agg(*cnt_exprs).first)
+        kw_row_f = AUX_POOL.submit(docs.agg(*cnt_exprs).first)
 
     toks = None
     for l in leaves:
@@ -839,9 +802,7 @@ def execute_tree(
                     spark, index_dir, sorted(set(words))
                 )
                 if len(set(words)) > 1:
-                    # tracked persist (released on the next query) — the
-                    # bare r5 .cache() pinned pp forever
-                    pp = _persist_tracked(pp)
+                    pp = QUERY_PERSISTS.persist(pp)
                 cur = pp.filter(F.col("term") == words[0]).select(
                     "doc_id", F.col("positions").alias("cur"))
                 prev_pos = pairs[0][0]
@@ -880,7 +841,7 @@ def execute_tree(
                         if ll.kind == "phrase"
                         for _, t in _phrase_pairs(ll.value)
                     })
-                    toks = _persist_tracked(
+                    toks = QUERY_PERSISTS.persist(
                         toks.filter(F.col("term").isin(ph_words))
                     )
                 qpos0 = pairs[0][0]

@@ -35,6 +35,7 @@ from .analyze import tokenize_text
 from .bm25 import SCORE_DECIMALS
 from .codec import decode_block
 from .postings import B, K1
+from .resources import WARM_INDEXES
 
 
 def idf(n_docs: int, df: int) -> float:
@@ -391,14 +392,10 @@ class _WarmIndex:
     the token. Scale note: the cache holds DataFrames (cluster memory
     via .persist), never driver-side rows — the same pattern works on a
     1000-executor cluster, where it is exactly Lucene/ES keeping segment
-    readers open between searches. At most ``_MAX_WARM`` indexes stay
-    warm; beyond that the least-recently-used entry is unpersisted
-    (long-lived sessions serving many indexes would otherwise pin every
-    index's doclens in cluster memory forever).
+    readers open between searches. Entries live in the bounded
+    ``resources.WARM_INDEXES`` pool, so long-lived sessions serving many
+    indexes never pin every index's doclens in cluster memory.
     """
-
-    _by_dir: dict[str, "_WarmIndex"] = {}
-    _MAX_WARM = 8
 
     def __init__(self, spark: SparkSession, index_dir: str, token: tuple):
         from .build import read_generations
@@ -413,23 +410,14 @@ class _WarmIndex:
         # - serve: FEW, FAT partitions — for a warm interactive query the
         #   task launch + Python round-trip dominate the sub-ms per-shard
         #   kernel, so fewer tasks win (measured local[32]/32 shards:
-        #   8 parts ≈ 0.48 s/query vs 0.75 s at 32). Env-tunable; on a
-        #   multi-executor cluster set ≈ the executor count.
+        #   8 parts ≈ 0.48 s/query vs 0.75 s at 32).
         # - batch (cogroup): one partition per shuffle slot, so a 50-query
         #   batch fans across every core (capping THIS at 8 cost 2.7× on
         #   batch100 at local[32]).
         from .catalog import ManifestCatalog
 
         props = ManifestCatalog(index_dir).load("shards").props
-        serve_parts = max(
-            1,
-            int(
-                os.environ.get(
-                    "SPARK_GRAFT_SERVE_PARTITIONS",
-                    min(int(props.get("n_shards", 8)) or 8, 8),
-                )
-            ),
-        )
+        serve_parts = min(int(props.get("n_shards", 8)) or 8, 8)
         batch_parts = max(int(spark.conf.get("spark.sql.shuffle.partitions")), 1)
         self.n_shards = int(props.get("n_shards") or 0)
         self.dls_serve = (
@@ -488,7 +476,7 @@ class _WarmIndex:
             self._dls.count()
         return self._dls
 
-    def _unpersist(self) -> None:
+    def unpersist(self) -> None:
         if self._dls is not None:
             self._dls.unpersist()
         self.dls_serve.unpersist()
@@ -498,18 +486,11 @@ class _WarmIndex:
     def get(cls, spark: SparkSession, index_dir: str) -> "_WarmIndex":
         key = os.path.abspath(index_dir)
         token = cls._snapshot_token(index_dir)
-        cached = cls._by_dir.get(key)
-        if cached is not None and cached.token == token:
-            cls._by_dir[key] = cls._by_dir.pop(key)  # LRU touch (dict order)
-            return cached
-        if cached is not None:
-            cached._unpersist()
-            del cls._by_dir[key]
-        while len(cls._by_dir) >= cls._MAX_WARM:
-            oldest = next(iter(cls._by_dir))
-            cls._by_dir.pop(oldest)._unpersist()
-        warm = cls(spark, index_dir, token)
-        cls._by_dir[key] = warm
+        warm = WARM_INDEXES.get(key)
+        if warm is None or warm.token != token:
+            WARM_INDEXES.pop(key)  # free a stale entry before rebuilding
+            warm = cls(spark, index_dir, token)
+            WARM_INDEXES.put(key, warm, spark.sparkContext)
         return warm
 
 
@@ -534,9 +515,7 @@ def evict_index(index_dir: str) -> None:
     the entry, so a dead index never pins cluster memory until LRU
     pressure (and a dropped-then-queried path can't try to recompute
     evicted cached partitions from deleted files). No-op if not warm."""
-    cached = _WarmIndex._by_dir.pop(os.path.abspath(index_dir), None)
-    if cached is not None:
-        cached._unpersist()
+    WARM_INDEXES.pop(os.path.abspath(index_dir))
 
 
 def _query_terms(stats: dict, query: str) -> list[str]:

@@ -153,18 +153,19 @@ def test_extraction_single_scan_matches_split(spark):
 
 
 def test_tracked_persist_pool_dedupes_and_caps(spark, docs):
-    from es_loaders_spark import querystring as qs
+    from es_loaders_spark.querystring import release_query_string_caches
+    from es_loaders_spark.resources import QUERY_PERSISTS
 
-    qs.release_query_string_caches()
-    a = qs._persist_tracked(docs.select("doc_id"))
-    n1 = len(qs._TRACKED_PERSISTS)
+    release_query_string_caches()
+    a = QUERY_PERSISTS.persist(docs.select("doc_id"))
+    n1 = len(QUERY_PERSISTS)
     # identical plan re-registers (no duplicate entry, stays cached)
-    b = qs._persist_tracked(docs.select("doc_id"))
-    assert len(qs._TRACKED_PERSISTS) == n1
+    b = QUERY_PERSISTS.persist(docs.select("doc_id"))
+    assert len(QUERY_PERSISTS) == n1
     assert b.storageLevel.useMemory or a.storageLevel.useMemory
     # distinct plans add entries; the cap bounds the pool
-    for i in range(qs._MAX_TRACKED + 3):
-        qs._persist_tracked(docs.select("doc_id").filter(F.col("doc_id") > i))
-    assert len(qs._TRACKED_PERSISTS) <= qs._MAX_TRACKED
-    qs.release_query_string_caches()
-    assert not qs._TRACKED_PERSISTS
+    for i in range(QUERY_PERSISTS.cap + 3):
+        QUERY_PERSISTS.persist(docs.select("doc_id").filter(F.col("doc_id") > i))
+    assert len(QUERY_PERSISTS) <= QUERY_PERSISTS.cap
+    release_query_string_caches()
+    assert not len(QUERY_PERSISTS)

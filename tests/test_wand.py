@@ -120,20 +120,21 @@ def test_kernel_skips_blocks():
 
 
 def test_build_warm_eagerly_populates_serving_cache(spark, documents, tmp_path_factory):
-    """build_index(warm=True) must leave a CURRENT _WarmIndex entry so the
+    """build_index(warm=True) must leave a CURRENT warm-index entry so the
     first interactive query skips cache materialization, and results match
     a cold index exactly."""
     import os as _os
 
+    from es_loaders_spark.resources import WARM_INDEXES
     from es_loaders_spark.wand import _WarmIndex
 
     d = str(tmp_path_factory.mktemp("warmidx"))
     build_index(spark, documents, d, n_shards=4, warm=True)
     key = _os.path.abspath(d)
-    cached = _WarmIndex._by_dir.get(key)
+    cached = WARM_INDEXES.get(key)
     assert cached is not None and cached.token == _WarmIndex._snapshot_token(d)
     got = [(r["doc_id"], r["score"]) for r in topk(spark, d, "spark data", k=5).collect()]
-    assert _WarmIndex._by_dir.get(key) is cached  # the query reused the eager cache
+    assert WARM_INDEXES.get(key) is cached  # the query reused the eager cache
     d2 = str(tmp_path_factory.mktemp("coldidx"))
     build_index(spark, documents, d2, n_shards=4)
     want = [(r["doc_id"], r["score"]) for r in topk(spark, d2, "spark data", k=5).collect()]
@@ -145,19 +146,20 @@ def test_evict_index_releases_cache_and_requery_rebuilds(
 ):
     import os as _os
 
-    from es_loaders_spark.wand import _WarmIndex, evict_index
+    from es_loaders_spark.resources import WARM_INDEXES
+    from es_loaders_spark.wand import evict_index
 
     d = str(tmp_path_factory.mktemp("evictidx"))
     build_index(spark, documents, d, n_shards=4, warm=True)
     key = _os.path.abspath(d)
-    assert key in _WarmIndex._by_dir
+    assert WARM_INDEXES.get(key) is not None
     before = [(r["doc_id"], r["score"]) for r in topk(spark, d, "spark data", k=5).collect()]
     evict_index(d)
-    assert key not in _WarmIndex._by_dir
+    assert WARM_INDEXES.get(key) is None
     evict_index(d)  # idempotent on a cold index
     # a later query on the still-live index rebuilds the cache and matches
     after = [(r["doc_id"], r["score"]) for r in topk(spark, d, "spark data", k=5).collect()]
-    assert after == before and key in _WarmIndex._by_dir
+    assert after == before and WARM_INDEXES.get(key) is not None
 
 
 def test_kernel_large_k_exact():
@@ -288,28 +290,30 @@ def test_merged_kernel_prunes_blocks(spark, documents, tmp_path_factory):
 
 
 def test_warm_index_cache_is_bounded(spark, tmp_path_factory):
-    """_WarmIndex evicts LRU beyond _MAX_WARM (no unbounded persist leak)."""
+    """The warm-index pool evicts LRU beyond its cap (no unbounded
+    persist leak)."""
     from es_loaders_spark.build import build_index
-    from es_loaders_spark.wand import _WarmIndex, topk
+    from es_loaders_spark.resources import WARM_INDEXES
+    from es_loaders_spark.wand import topk
 
     dirs = []
     docs = spark.createDataFrame(
         [(i, f"alpha beta w{i}") for i in range(30)], "doc_id long, text string"
     )
-    old_max = _WarmIndex._MAX_WARM
-    _WarmIndex._MAX_WARM = 2
+    old_cap = WARM_INDEXES.cap
+    WARM_INDEXES.cap = 2
     try:
         for i in range(3):
             d = str(tmp_path_factory.mktemp(f"warm{i}"))
             build_index(spark, docs, d, n_shards=2, positions=False)
             topk(spark, d, "alpha", k=3).collect()
             dirs.append(os.path.abspath(d))
-        assert len(_WarmIndex._by_dir) <= 2
-        assert dirs[0] not in _WarmIndex._by_dir  # oldest evicted
+        assert len(WARM_INDEXES) <= 2
+        assert WARM_INDEXES.get(dirs[0]) is None  # oldest evicted
         # evicted index still queryable (re-warms on demand)
         assert topk(spark, dirs[0], "alpha", k=3).count() == 3
     finally:
-        _WarmIndex._MAX_WARM = old_max
+        WARM_INDEXES.cap = old_cap
 
 
 def test_sorted_segments_structure():
