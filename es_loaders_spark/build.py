@@ -27,14 +27,18 @@ import time
 import numpy as np
 import pandas as pd
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from .analyze import tokenize_texts
 from .catalog import ManifestCatalog, PartitionEntry
-from .codec import encode_blocks_flat  # used in _build_shard_fn
+from .codec import (
+    decode_blocks_flat_batch,
+    decode_positions_flat_batch,
+    encode_blocks_flat,
+)
 from .resources import AUX_POOL, ID_ASSIGNMENTS
 
 # FLAT index layout: one row per posting block. Nested array<struct>
@@ -175,22 +179,49 @@ def assign_doc_ids(docs: DataFrame, url_col: str = "url") -> DataFrame:
     return out
 
 
-def _build_terms_table(spark, shards_dir: str, terms_dir: str) -> tuple[int, int]:
-    """Global term document frequencies (for idf): one groupBy over the
-    block-0 rows of the shard table, written to ``terms_dir``. Returns
-    (n_terms, wall_ms); the CALLER commits the manifest entry (commit
-    order is part of the crash/resume contract)."""
-    t0 = time.time()
-    spark.sparkContext.setJobDescription("build_index: terms table")
-    tdf = (
-        spark.read.parquet(shards_dir)
-        .filter(F.col("block_id") == 0)  # df is per-(shard,term), on every block row
+def term_dfs(shards: DataFrame) -> DataFrame:
+    """(term, df): global term document frequencies (for idf) of a set of
+    block rows — one groupBy over their block-0 rows."""
+    return (
+        shards.filter(F.col("block_id") == 0)  # df is per-(shard,term), on every block row
         .groupBy("term")
         .agg(F.sum("df").alias("df"))
     )
-    tdf.write.mode("overwrite").parquet(terms_dir)
-    n_terms = spark.read.parquet(terms_dir).count()
-    return n_terms, int((time.time() - t0) * 1000)
+
+
+def stats_record(
+    prior: dict, *, n_docs: int, avgdl: float, max_doc_id: int, generations: int
+) -> dict:
+    """The stats.json commit: corpus stats and generation count, plus the
+    index settings (positions, analysis chain, routing) and the applied
+    batch records carried over from ``prior``."""
+    return {
+        "format": INDEX_FORMAT,
+        "n_docs": int(n_docs),
+        "avgdl": float(avgdl),
+        "max_doc_id": int(max_doc_id),
+        "generations": int(generations),
+        "applied_batches": list(prior.get("applied_batches", [])),
+        "batch_bases": dict(prior.get("batch_bases", {})),
+        "positions": bool(prior.get("positions", True)),
+        "analysis": prior.get("analysis"),
+        "routing_field": prior.get("routing_field"),
+    }
+
+
+def _build_terms_table(spark, shards_dir: str, terms_dir: str):
+    """Write the shard table's term dfs to ``terms_dir`` on the aux pool.
+    The future yields (n_terms, wall_ms); the CALLER commits the manifest
+    entry (commit order is part of the crash/resume contract)."""
+
+    def job() -> tuple[int, int]:
+        t0 = time.time()
+        tdf = term_dfs(spark.read.parquet(shards_dir))
+        tdf.write.mode("overwrite").parquet(terms_dir)
+        n_terms = spark.read.parquet(terms_dir).count()
+        return n_terms, int((time.time() - t0) * 1000)
+
+    return AUX_POOL.submit(job, label="build_index: terms table")
 
 
 def release_doc_id_caches(result: DataFrame | None = None) -> None:
@@ -223,14 +254,28 @@ def release_doc_id_caches(result: DataFrame | None = None) -> None:
     ID_ASSIGNMENTS.clear()
 
 
-def _require_string_routing(docs, routing_field: str) -> None:
-    """Routing keys must be STRING columns: the build side hashes
-    Spark's cast-to-string rendering while the query side hashes
-    Python's str() — for doubles (scientific notation) and booleans
-    ("true" vs "True") the two renderings differ, silently pruning a
-    routed query to the WRONG shard. ES routing values are strings too;
-    cast explicitly at ingest to pick ONE rendering."""
-    dt = dict(docs.dtypes).get(routing_field)
+def _shard_col(
+    docs: DataFrame, n_shards: int, routing_field: str | None, id_col: str
+) -> Column:
+    """Each document's shard, as a column of ``docs``: ``doc_id %
+    n_shards``, or on a routed index the routing key's portable hash
+    (ES document routing: every doc sharing a key lands in ONE shard and
+    a routed query prunes to it — wand.topk(routing=...)).
+
+    Routing keys must be STRING columns: the build side hashes Spark's
+    cast-to-string rendering while the query side hashes Python's str()
+    — for doubles (scientific notation) and booleans ("true" vs "True")
+    the two renderings differ, silently pruning a routed query to the
+    WRONG shard. ES routing values are strings too; cast explicitly at
+    ingest to pick ONE rendering."""
+    if routing_field is None:
+        return F.pmod(F.col(id_col), F.lit(n_shards)).cast("int")
+    if routing_field not in docs.columns:
+        raise ValueError(
+            f"routing_field {routing_field!r} is not a column of the "
+            f"input ({docs.columns})"
+        )
+    dt = dict(docs.dtypes)[routing_field]
     if dt != "string":
         raise ValueError(
             f"routing_field {routing_field!r} must be a string column, "
@@ -238,6 +283,7 @@ def _require_string_routing(docs, routing_field: str) -> None:
             "doubles/booleans differently, so build-side and query-side "
             "hashes would disagree — cast it to string at ingest"
         )
+    return _routing_shard_col(routing_field, n_shards)
 
 
 def routing_shard_ids(
@@ -250,7 +296,7 @@ def routing_shard_ids(
     it read stats.json + the manifest). Refuses unrouted indexes — a
     routed request against a doc_id-sharded index would silently search
     the wrong shard — and non-string routing values: the routed column
-    is string-typed (_require_string_routing), and str(True)="True" /
+    is string-typed (_shard_col), and str(True)="True" /
     str(1.5) would hash a rendering the index never stored."""
     stats = stats if stats is not None else load_stats(index_dir)
     if not stats.get("routing_field"):
@@ -318,6 +364,50 @@ def routing_shard_id(value, n_shards: int) -> int:
     return h % int(n_shards)
 
 
+# pandas dtypes of INDEX_SCHEMA's numeric columns; the others hold str/bytes
+_PD_DTYPES = {"integer": "int32", "long": "int64"}
+
+
+def empty_block_rows() -> pd.DataFrame:
+    """A shard without postings, as INDEX_SCHEMA rows."""
+    return pd.DataFrame(
+        {
+            f.name: pd.Series(dtype=_PD_DTYPES.get(f.dataType.typeName(), "object"))
+            for f in INDEX_SCHEMA.fields
+        }
+    )
+
+
+def block_rows(
+    shard: int,
+    codes: np.ndarray,
+    terms,
+    doc_ids: np.ndarray,
+    tfs: np.ndarray,
+    dls: np.ndarray,
+    positions: np.ndarray | None,
+) -> pd.DataFrame:
+    """One shard's postings as INDEX_SCHEMA block rows. Postings arrive
+    grouped by term code (``terms[code]`` is the term) and doc-sorted
+    within a term; a term's df is its posting count. ``positions``:
+    token positions in posting order (None: a BM25-only index)."""
+    seg = np.concatenate(
+        [[0], np.flatnonzero(np.diff(codes)) + 1, [codes.size]]
+    ).astype(np.int64)
+    fb = encode_blocks_flat(doc_ids, tfs, dls, seg, positions=positions)
+    seg_terms = np.asarray(terms, dtype=object)[codes[seg[:-1]]]
+    t = fb["term_idx"]
+    return pd.DataFrame(
+        {
+            "shard": np.full(t.size, shard, dtype=np.int32),
+            "term": seg_terms[t],
+            "df": np.diff(seg)[t],
+            # block_id .. pos_payload: the codec's columns, by name
+            **{f.name: fb[f.name] for f in INDEX_SCHEMA.fields[3:]},
+        }
+    )
+
+
 def _build_shard_fn(
     doclens_dir: str | None = None, positions: bool = True, chain=None
 ):
@@ -367,26 +457,8 @@ def _build_shard_fn(
                 pa.table({"doc_id": doc_ids, "dl": lens.astype(np.int32)}), tmp
             )
             os.replace(tmp, os.path.join(d, "data.parquet"))
-        empty = pd.DataFrame(
-            {
-                "shard": pd.Series(dtype="int32"),
-                "term": pd.Series(dtype="object"),
-                "df": pd.Series(dtype="int64"),
-                "block_id": pd.Series(dtype="int32"),
-                "min_doc": pd.Series(dtype="int64"),
-                "max_doc": pd.Series(dtype="int64"),
-                "n": pd.Series(dtype="int32"),
-                "max_tf": pd.Series(dtype="int64"),
-                "min_dl": pd.Series(dtype="int64"),
-                "docs_payload": pd.Series(dtype="object"),
-                "tfs_payload": pd.Series(dtype="object"),
-                "sky_tfs_payload": pd.Series(dtype="object"),
-                "sky_dls_payload": pd.Series(dtype="object"),
-                "pos_payload": pd.Series(dtype="object"),
-            }
-        )
         if flat.size == 0:
-            return empty
+            return empty_block_rows()
         tok_doc = np.repeat(doc_ids, lens)
         tok_dl = np.repeat(lens, lens)
 
@@ -416,35 +488,97 @@ def _build_shard_fn(
         new[1:] = (c[1:] != c[:-1]) | (d[1:] != d[:-1])
         starts = np.flatnonzero(new)
         tf = np.diff(np.append(starts, c.size))
-        p_doc, p_code, p_dl = d[starts], c[starts], dls[starts]
-
-        seg = np.concatenate(
-            [[0], np.flatnonzero(np.diff(p_code)) + 1, [p_code.size]]
-        ).astype(np.int64)
-        term_codes = p_code[seg[:-1]]
-        fb = encode_blocks_flat(p_doc, tf, p_dl, seg, positions=pos_sorted)
-        term_strs = np.asarray(uniques, dtype=object)
-        seg_df = np.diff(seg)
-        return pd.DataFrame(
-            {
-                "shard": np.full(fb["term_idx"].size, shard, dtype=np.int32),
-                "term": term_strs[term_codes[fb["term_idx"]]],
-                "df": seg_df[fb["term_idx"]],
-                "block_id": fb["block_id"],
-                "min_doc": fb["min_doc"],
-                "max_doc": fb["max_doc"],
-                "n": fb["n"],
-                "max_tf": fb["max_tf"],
-                "min_dl": fb["min_dl"],
-                "docs_payload": fb["docs_payload"],
-                "tfs_payload": fb["tfs_payload"],
-                "sky_tfs_payload": fb["sky_tfs_payload"],
-                "sky_dls_payload": fb["sky_dls_payload"],
-                "pos_payload": fb["pos_payload"],
-            }
+        return block_rows(
+            shard, c[starts], uniques, d[starts], tf, dls[starts], pos_sorted
         )
 
     return build_shard
+
+
+def _classic_postings(docs: DataFrame, missing: list[int], kernel) -> DataFrame:
+    """Block rows of the ``missing`` shards of ``docs`` (doc_id, text,
+    shard): one shuffle by shard, then the encode kernel per shard."""
+    return (
+        docs.select("shard", "doc_id", "text")
+        .filter(F.col("shard").isin(missing))
+        .repartition(len(missing), "shard")
+        .groupBy("shard")
+        .applyInPandas(kernel, INDEX_SCHEMA)
+    )
+
+
+# Shared (shard)-keyed re-encode kernel: decode every block of the group,
+# keep only docs present in the doclens side (the "live set" — survivors
+# for compaction, everything for a generation merge), re-segment by term,
+# re-encode. Generations have disjoint ascending docID ranges, so sorting
+# by (term, min_doc) makes the concatenation doc-sorted globally.
+def reencode_shard(key, idx_pdf: pd.DataFrame, dl_pdf: pd.DataFrame) -> pd.DataFrame:
+    # dl_pdf empty = every doc in this shard tombstoned → no survivors
+    # (keep_docs[np.minimum(pos_idx, -1)] on a size-0 array would raise:
+    # numpy & does not short-circuit; ADVICE r02)
+    if idx_pdf.empty or dl_pdf.empty:
+        return empty_block_rows()
+    keep_docs = np.sort(dl_pdf["doc_id"].to_numpy(dtype=np.int64))
+    keep_dls = dl_pdf.sort_values("doc_id")["dl"].to_numpy(dtype=np.int64)
+    # ONE vectorized pass for the whole shard (VERDICT r02 #3):
+    # batch-decode all blocks (term-grouped, doc-sorted — generations
+    # have disjoint ascending ranges), mask survivors, re-segment by
+    # term, and re-encode every term's postings in one
+    # encode_blocks_flat call.
+    srt = idx_pdf.sort_values(["term", "min_doc"], kind="stable")
+    d_flat, t_flat, off = decode_blocks_flat_batch(
+        srt["min_doc"].to_numpy(), srt["docs_payload"].tolist(),
+        srt["tfs_payload"].tolist(),
+    )
+    counts = np.diff(off)
+    raw_pos = srt["pos_payload"].tolist()
+    has_pos = all(p is not None and len(p) > 0 for p in raw_pos)
+    pos_flat = (
+        decode_positions_flat_batch(raw_pos, t_flat) if has_pos else None
+    )
+    codes, uniq_terms = pd.factorize(srt["term"], sort=False)
+    post_code = np.repeat(codes, counts)
+
+    pos_idx = np.searchsorted(keep_docs, d_flat)
+    ok = (pos_idx < keep_docs.size) & (
+        keep_docs[np.minimum(pos_idx, keep_docs.size - 1)] == d_flat
+    )
+    if not ok.any():
+        return empty_block_rows()
+    docs = d_flat[ok]
+    return block_rows(
+        int(key[0]),
+        post_code[ok],
+        uniq_terms,
+        docs,
+        t_flat[ok],
+        keep_dls[np.searchsorted(keep_docs, docs)],
+        pos_flat[np.repeat(ok, t_flat)] if has_pos else None,
+    )
+
+
+def rewrite_shards(
+    shards: DataFrame, doclens: DataFrame, n_shards: int,
+    shards_out: str, doclens_out: str,
+) -> DataFrame:
+    """Re-encode the block rows ``shards`` down to the live set
+    ``doclens``: the doclens are written per shard and doc-sorted (as the
+    build writes them), then every shard's blocks are decoded, cut to its
+    live docs and encoded again, with each surviving posting's dl taken
+    from the shard's doclens. Returns the written doclens table."""
+    doclens.repartition(n_shards, "shard").sortWithinPartitions("doc_id").write.mode(
+        "overwrite"
+    ).partitionBy("shard").parquet(doclens_out)
+    live = doclens.sparkSession.read.parquet(doclens_out)
+    (
+        shards.groupBy("shard")
+        .cogroup(live.groupBy("shard"))
+        .applyInPandas(reencode_shard, INDEX_SCHEMA)
+        .write.mode("overwrite")
+        .partitionBy("shard")
+        .parquet(shards_out)
+    )
+    return live
 
 
 def build_index(
@@ -533,17 +667,10 @@ def build_index(
             "count surviving tokens"
         )
     cols = [F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")]
-    if routing_field is not None:
-        if routing_field not in docs.columns:
-            raise ValueError(
-                f"routing_field {routing_field!r} is not a column of the "
-                f"input ({docs.columns})"
-            )
-        _require_string_routing(docs, routing_field)
-        cols.append(F.col(routing_field).alias("_routing"))
-    docs = docs.select(*cols + ([F.col("dl")] if has_dl else []))
+    cols += [F.col("dl")] if has_dl else []
     if align_shards:
         # shard = scan split; ids assigned per-row at scan time, no shuffle
+        docs = docs.select(*cols)
         n_shards = docs.rdd.getNumPartitions()
         # input-layout fingerprint: split planning is deterministic given
         # (files, maxPartitionBytes), so a resume is only sound while the
@@ -571,17 +698,9 @@ def build_index(
                 "align_shards=False."
             )
         docs = docs.withColumn("shard", F.spark_partition_id().cast("int"))
-    elif routing_field is not None:
-        # ES document routing: shard = hash(routing) % n_shards, so every
-        # doc sharing a routing key lands in ONE shard and a routed query
-        # prunes to it (wand.topk(routing=...)). The portable md5 hash
-        # keeps the assignment reproducible in the DuckDB oracle. A NULL
-        # routing key fails the build loudly (ES: routing_required).
-        docs = docs.withColumn("shard", _routing_shard_col("_routing", n_shards)).drop("_routing")
     else:
-        docs = docs.withColumn(
-            "shard", F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int")
-        )
+        shard = _shard_col(docs, n_shards, routing_field, id_col)
+        docs = docs.select(*cols, shard.alias("shard"))
 
     # --- stage 1: corpus stats — single-row agg; a precomputed `dl` column
     # (written at ingest) makes this a columnar scan with no tokenization.
@@ -601,34 +720,34 @@ def build_index(
         )
 
         def _stats_job():
-            spark.sparkContext.setJobDescription("build_index: corpus stats")
             agg = docs.select("doc_id", dl_col.alias("dl")).agg(
                 F.count("*").alias("n"),
                 F.avg("dl").alias("avgdl"),
                 F.max("doc_id").alias("max_id"),
             ).collect()[0]
-            return {
-                "format": INDEX_FORMAT,
-                "n_docs": int(agg["n"]),
-                "avgdl": float(agg["avgdl"] or 0.0),
-                "max_doc_id": int(
-                    agg["max_id"] if agg["max_id"] is not None else -1
-                ),
-                "generations": 1,
-                "applied_batches": [],
-                "batch_bases": {},
-                "positions": bool(positions),
+            settings = {
+                "positions": positions,
                 "analysis": analysis,
                 "routing_field": routing_field,
             }
+            return stats_record(
+                settings,
+                n_docs=agg["n"],
+                avgdl=agg["avgdl"] or 0.0,
+                max_doc_id=agg["max_id"] if agg["max_id"] is not None else -1,
+                generations=1,
+            )
 
-        stats_future = AUX_POOL.submit(_stats_job)
+        stats_future = AUX_POOL.submit(
+            _stats_job, label="build_index: corpus stats"
+        )
 
     # --- stage 2: per-shard posting build — THE one heavy pass over text.
     # One shuffle by shard; the UDF tokenizes once, emits posting blocks,
     # and side-writes the shard's doclens file from the same tokens. ---
     doclens_dir = os.path.join(index_dir, "doclens")
     shards_dir = os.path.join(index_dir, "shards")
+    terms_dir = os.path.join(index_dir, "terms")
     done = cat.committed_partitions("shards", "postings") if resume else set()
     missing = sorted(set(range(n_shards)) - done)
     terms_f = None
@@ -708,13 +827,7 @@ def build_index(
                 built = built.filter(~F.col("shard").isin(sorted(done)))
             built = built.mapInPandas(_run_partition, INDEX_SCHEMA)
         else:
-            built = (
-                docs.select("shard", "doc_id", "text")
-                .filter(F.col("shard").isin(missing))
-                .repartition(len(missing), "shard")
-                .groupBy("shard")
-                .applyInPandas(kernel, INDEX_SCHEMA)
-            )
+            built = _classic_postings(docs, missing, kernel)
         built.write.partitionBy("shard").mode("append").parquet(shards_dir)
         wall = int((time.time() - t0) * 1000)
         # manifest/lineage key: classic mode = the shard itself; aligned
@@ -732,7 +845,6 @@ def build_index(
         # unchanged — shards/doclens commit first, terms commits after —
         # so the crash/resume contract is exactly the serial one's.
         def _lineage_job():
-            spark.sparkContext.setJobDescription("build_index: shard lineage")
             return {
                 r["k"]: r
                 for r in spark.read.parquet(shards_dir)
@@ -741,9 +853,7 @@ def build_index(
                 .groupBy("k")
                 .agg(
                     F.count_distinct("term").alias("terms"),
-                    F.sum(
-                        F.when(F.col("block_id") == 0, F.col("df"))
-                    ).alias("postings"),
+                    F.sum("n").alias("postings"),
                     F.sum(
                         F.length("docs_payload") + F.length("tfs_payload")
                     ).alias("bytes"),
@@ -752,7 +862,6 @@ def build_index(
             }
 
         def _docs_per_shard_job():
-            spark.sparkContext.setJobDescription("build_index: doclens lineage")
             return {
                 r["k"]: r["cnt"]
                 for r in spark.read.parquet(doclens_dir)
@@ -763,14 +872,14 @@ def build_index(
                 .collect()
             }
 
-        lineage_f = AUX_POOL.submit(_lineage_job)
-        docs_per_shard_f = AUX_POOL.submit(_docs_per_shard_job)
-        terms_dir = os.path.join(index_dir, "terms")
-        terms_f = None
+        lineage_f = AUX_POOL.submit(
+            _lineage_job, label="build_index: shard lineage"
+        )
+        docs_per_shard_f = AUX_POOL.submit(
+            _docs_per_shard_job, label="build_index: doclens lineage"
+        )
         if not cat.committed_partitions("terms", "terms"):
-            terms_f = AUX_POOL.submit(
-                _build_terms_table, spark, shards_dir, terms_dir
-            )
+            terms_f = _build_terms_table(spark, shards_dir, terms_dir)
         lineage = lineage_f.result()
         docs_per_shard = docs_per_shard_f.result()
         if stats_future is not None:
@@ -836,12 +945,10 @@ def build_index(
     # already built concurrently with the lineage aggregates above; the
     # manifest COMMIT happens here, strictly after the shards/doclens
     # commits, preserving the serial crash/resume contract. ---
-    terms_dir = os.path.join(index_dir, "terms")
     if not cat.committed_partitions("terms", "terms"):
-        if terms_f is not None:
-            n_terms, terms_wall = terms_f.result()
-        else:
-            n_terms, terms_wall = _build_terms_table(spark, shards_dir, terms_dir)
+        if terms_f is None:
+            terms_f = _build_terms_table(spark, shards_dir, terms_dir)
+        n_terms, terms_wall = terms_f.result()
         cat.commit(
             "terms",
             [
@@ -958,28 +1065,13 @@ def append_documents(
 
     chain = AnalysisChain.from_config(stats.get("analysis"))
 
-    routing_field = stats.get("routing_field")
-    if routing_field is not None:
-        # routed index: appends shard by the SAME routing hash, so the
-        # routed-query pruning contract survives every generation
-        if routing_field not in docs.columns:
-            raise ValueError(
-                f"this index has routing_field {routing_field!r}; the "
-                f"append input must carry that column ({docs.columns})"
-            )
-        _require_string_routing(docs, routing_field)
-        docs = docs.select(
-            F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"),
-            F.col(routing_field).alias("_routing"),
-        ).withColumn(
-            "shard", _routing_shard_col("_routing", n_shards)
-        ).drop("_routing")
-    else:
-        docs = docs.select(
-            F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-        ).withColumn(
-            "shard", F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int")
-        )
+    # a routed index's appends shard by the SAME routing hash, so the
+    # routed-query pruning contract survives every generation
+    shard = _shard_col(docs, n_shards, stats.get("routing_field"), id_col)
+    docs = docs.select(
+        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"),
+        shard.alias("shard"),
+    )
 
     agg = docs.agg(
         F.count("*").alias("n"),
@@ -1005,15 +1097,8 @@ def append_documents(
         cat.clean_uncommitted(f"doclens_gen{gen}")
         os.makedirs(doclens_dir, exist_ok=True)
         t0 = time.time()
-        built = (
-            docs.filter(F.col("shard").isin(missing))
-            .repartition(len(missing), "shard")
-            .groupBy("shard")
-            .applyInPandas(
-                _build_shard_fn(doclens_dir, positions=positions, chain=chain),
-                INDEX_SCHEMA,
-            )
-        )
+        kernel = _build_shard_fn(doclens_dir, positions=positions, chain=chain)
+        built = _classic_postings(docs, missing, kernel)
         built.write.partitionBy("shard").mode("append").parquet(shards_dir)
         wall = int((time.time() - t0) * 1000)
         # ONE aggregate serves both the per-shard lineage counts and the
@@ -1052,21 +1137,14 @@ def append_documents(
     # never see a bumped generation whose dfs are missing (wrong idf).
     # The union lists old generations (from current stats) + the new dir
     # explicitly, since read_generations only sees committed generations.
-    terms_dir = os.path.join(index_dir, "terms")
     all_gens = union_parquet_dirs(
         spark, generation_dirs(index_dir, "shards") + [shards_dir]
     )
-    tdf = (
-        all_gens.filter(F.col("block_id") == 0)
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"))
+    terms_f = AUX_POOL.submit(
+        term_dfs(all_gens).write.mode("overwrite").parquet,
+        os.path.join(index_dir, "terms"),
+        label="append_documents: terms table",
     )
-
-    def _terms_write():
-        spark.sparkContext.setJobDescription("append_documents: terms table")
-        tdf.write.mode("overwrite").parquet(terms_dir)
-
-    terms_f = AUX_POOL.submit(_terms_write)
     # the corpus-stats aggregate (when not already folded into the shard
     # lineage above) overlaps the terms recompute; BOTH complete before
     # the stats.json visibility point below
@@ -1107,18 +1185,13 @@ def append_documents(
     if batch_tag:
         applied.append(batch_tag)
         bases[batch_tag] = int(agg["min_id"])
-    stats = {
-        "format": INDEX_FORMAT,
-        "n_docs": new_n,
-        "avgdl": (old_total_dl + float(dl_totals[1])) / max(new_n, 1),
-        "max_doc_id": int(agg["max_id"]),
-        "generations": gen + 1,
-        "applied_batches": applied,
-        "batch_bases": bases,
-        "positions": positions,
-        "analysis": stats.get("analysis"),
-        "routing_field": routing_field,
-    }
+    stats = stats_record(
+        {**stats, "applied_batches": applied, "batch_bases": bases},
+        n_docs=new_n,
+        avgdl=(old_total_dl + float(dl_totals[1])) / max(new_n, 1),
+        max_doc_id=agg["max_id"],
+        generations=gen + 1,
+    )
     _write_json_atomic(stats_path, stats)
     return stats
 

@@ -28,23 +28,22 @@ from __future__ import annotations
 
 import os
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .build import (
-    INDEX_SCHEMA,
     _write_json_atomic,
     generation_dirs,
+    load_stats,
     read_generations,
+    rewrite_shards,
+    stats_record,
+    term_dfs,
+    union_parquet_dirs,
 )
 from .catalog import ManifestCatalog, PartitionEntry
-from .codec import (
-    decode_blocks_flat_batch,
-    decode_positions_flat_batch,
-    encode_blocks_flat,
-)
+from .codec import decode_blocks_flat_batch
 
 
 _ASIDE_SUFFIXES = ("_precompact", "_premerge")
@@ -186,86 +185,6 @@ def delete_by_term(spark: SparkSession, index_dir: str, term: str) -> int:
     return delete_ids(spark, index_dir, ids)
 
 
-# Shared (shard)-keyed re-encode kernel: decode every block of the group,
-# keep only docs present in the doclens side (the "live set" — survivors
-# for compaction, everything for a generation merge), re-segment by term,
-# re-encode. Generations have disjoint ascending docID ranges, so sorting
-# by (term, min_doc) makes the concatenation doc-sorted globally.
-def reencode_shard(key, idx_pdf: pd.DataFrame, dl_pdf: pd.DataFrame) -> pd.DataFrame:
-    shard = int(key[0])
-    empty = pd.DataFrame(
-        {
-            f.name: pd.Series(
-                dtype="object" if "payload" in f.name or f.name == "term" else "int64"
-            )
-            for f in INDEX_SCHEMA.fields
-        }
-    )
-    # dl_pdf empty = every doc in this shard tombstoned → no survivors
-    # (keep_docs[np.minimum(pos_idx, -1)] on a size-0 array would raise:
-    # numpy & does not short-circuit; ADVICE r02)
-    if idx_pdf.empty or dl_pdf.empty:
-        return empty
-    keep_docs = np.sort(dl_pdf["doc_id"].to_numpy(dtype=np.int64))
-    keep_dls = dl_pdf.sort_values("doc_id")["dl"].to_numpy(dtype=np.int64)
-    # ONE vectorized pass for the whole shard (VERDICT r02 #3):
-    # batch-decode all blocks (term-grouped, doc-sorted — generations
-    # have disjoint ascending ranges), mask survivors, re-segment by
-    # term, and re-encode every term's postings in one
-    # encode_blocks_flat call.
-    srt = idx_pdf.sort_values(["term", "min_doc"], kind="stable")
-    d_flat, t_flat, off = decode_blocks_flat_batch(
-        srt["min_doc"].to_numpy(), srt["docs_payload"].tolist(),
-        srt["tfs_payload"].tolist(),
-    )
-    counts = np.diff(off)
-    raw_pos = srt["pos_payload"].tolist()
-    has_pos = all(p is not None and len(p) > 0 for p in raw_pos)
-    pos_flat = (
-        decode_positions_flat_batch(raw_pos, t_flat) if has_pos else None
-    )
-    codes, uniq_terms = pd.factorize(srt["term"], sort=False)
-    post_code = np.repeat(codes, counts)
-
-    pos_idx = np.searchsorted(keep_docs, d_flat)
-    ok = (pos_idx < keep_docs.size) & (
-        keep_docs[np.minimum(pos_idx, keep_docs.size - 1)] == d_flat
-    )
-    if not ok.any():
-        return empty
-    docs = d_flat[ok]
-    tfs = t_flat[ok]
-    code_kept = post_code[ok]
-    dls_per_posting = keep_dls[np.searchsorted(keep_docs, docs)]
-    positions = pos_flat[np.repeat(ok, t_flat)] if has_pos else None
-
-    seg = np.concatenate(
-        [[0], np.flatnonzero(np.diff(code_kept)) + 1, [code_kept.size]]
-    ).astype(np.int64)
-    term_codes = code_kept[seg[:-1]]
-    seg_df = np.diff(seg)
-    fb = encode_blocks_flat(docs, tfs, dls_per_posting, seg, positions=positions)
-    term_strs = np.asarray(uniq_terms, dtype=object)
-    return pd.DataFrame(
-        {
-            "shard": np.full(fb["term_idx"].size, shard, dtype=np.int32),
-            "term": term_strs[term_codes[fb["term_idx"]]],
-            "df": seg_df[fb["term_idx"]],
-            "block_id": fb["block_id"],
-            "min_doc": fb["min_doc"],
-            "max_doc": fb["max_doc"],
-            "n": fb["n"],
-            "max_tf": fb["max_tf"],
-            "min_dl": fb["min_dl"],
-            "docs_payload": fb["docs_payload"],
-            "tfs_payload": fb["tfs_payload"],
-            "sky_tfs_payload": fb["sky_tfs_payload"],
-            "sky_dls_payload": fb["sky_dls_payload"],
-            "pos_payload": fb["pos_payload"],
-        }
-    )
-
-
 def compact_index(spark: SparkSession, index_dir: str) -> dict:
     """Physically drop tombstoned docs: rebuild shards/doclens/terms from
     the survivor set, clear tombstones, reset to one generation.
@@ -276,8 +195,6 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     stats.json is replaced LAST (atomic visibility point).
     """
     import shutil
-
-    from .build import INDEX_FORMAT, load_stats
 
     # crash-retry gate FIRST (ADVICE r04, high): if a previous compaction
     # died mid-swap, the *_precompact dirs are the only copy of the index —
@@ -300,28 +217,15 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
         if name.endswith("_precompact"):
             shutil.rmtree(os.path.join(index_dir, name), ignore_errors=True)
 
-    # survivor doclens (per shard, doc-sorted like the build writes them)
-    dls = read_generations(spark, index_dir, "doclens").join(
-        tomb, "doc_id", "left_anti"
-    )
+    # survivor doclens and postings
     new_doclens = os.path.join(index_dir, "doclens_compact")
-    dls.repartition(n_shards, "shard").sortWithinPartitions("doc_id").write.mode(
-        "overwrite"
-    ).partitionBy("shard").parquet(new_doclens)
-
-    # survivor postings: per-shard decode → filter → re-encode; dl per
-    # surviving posting comes from the shard's doclens side of the cogroup
-    shards = read_generations(spark, index_dir, "shards")
-    dl_clean = spark.read.parquet(new_doclens)
-
     new_shards = os.path.join(index_dir, "shards_compact")
-    (
-        shards.groupBy("shard")
-        .cogroup(dl_clean.groupBy("shard"))
-        .applyInPandas(reencode_shard, INDEX_SCHEMA)
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(new_shards)
+    dl_clean = rewrite_shards(
+        read_generations(spark, index_dir, "shards"),
+        read_generations(spark, index_dir, "doclens").join(
+            tomb, "doc_id", "left_anti"
+        ),
+        n_shards, new_shards, new_doclens,
     )
 
     # new global stats + term dfs from the compacted tables
@@ -329,13 +233,8 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
         F.count("*").alias("n"), F.avg("dl").alias("avgdl")
     ).collect()[0]
     new_terms = os.path.join(index_dir, "terms_compact")
-    (
-        spark.read.parquet(new_shards)
-        .filter(F.col("block_id") == 0)
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"))
-        .write.mode("overwrite")
-        .parquet(new_terms)
+    term_dfs(spark.read.parquet(new_shards)).write.mode("overwrite").parquet(
+        new_terms
     )
 
     # swap — crash-safe: NOTHING is deleted before the stats commit. Old
@@ -361,20 +260,15 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     os.replace(new_doclens, os.path.join(index_dir, "doclens"))
     os.replace(new_terms, os.path.join(index_dir, "terms"))
 
-    stats = {
-        "format": INDEX_FORMAT,
-        "n_docs": int(agg["n"]),
-        "avgdl": float(agg["avgdl"] or 0.0),
+    stats = stats_record(
+        stats,
+        n_docs=agg["n"],
+        avgdl=agg["avgdl"] or 0.0,
         # doc_ids are NEVER reused: max_doc_id keeps its high-water mark
         # even if the top docs were deleted (append contract stays monotone)
-        "max_doc_id": int(stats.get("max_doc_id", -1)),
-        "generations": 1,
-        "applied_batches": list(stats.get("applied_batches", [])),
-        "batch_bases": dict(stats.get("batch_bases", {})),
-        "analysis": stats.get("analysis"),
-        "positions": bool(stats.get("positions", True)),
-        "routing_field": stats.get("routing_field"),
-    }
+        max_doc_id=stats.get("max_doc_id", -1),
+        generations=1,
+    )
     _write_json_atomic(stats_path, stats)
     # visible now — clear tombstones and sweep the aside state
     cat.drop("deletes")
@@ -425,8 +319,6 @@ def merge_generations(
     import re
     import shutil
 
-    from .build import load_stats, union_parquet_dirs
-
     # crash-retry gate FIRST (ADVICE r04, high): a merge that died in the
     # swap window left the appended generations only under *_premerge —
     # sweeping before this check would delete the sole surviving copy and
@@ -460,22 +352,11 @@ def merge_generations(
     dl_dirs = [os.path.join(index_dir, f"doclens_gen{i}") for i in range(1, g)]
 
     tmp_dl = os.path.join(index_dir, "doclens_genmerge_tmp")
-    union_parquet_dirs(spark, dl_dirs).repartition(
-        n_shards, "shard"
-    ).sortWithinPartitions("doc_id").write.mode("overwrite").partitionBy(
-        "shard"
-    ).parquet(tmp_dl)
-    dl_merged = spark.read.parquet(tmp_dl)
-
     tmp_sh = os.path.join(index_dir, "shards_genmerge_tmp")
-    (
-        union_parquet_dirs(spark, shard_dirs)
-        .groupBy("shard")
-        .cogroup(dl_merged.groupBy("shard"))
-        .applyInPandas(reencode_shard, INDEX_SCHEMA)
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(tmp_sh)
+    dl_merged = rewrite_shards(
+        union_parquet_dirs(spark, shard_dirs),
+        union_parquet_dirs(spark, dl_dirs),
+        n_shards, tmp_sh, tmp_dl,
     )
     docs_per_shard = {
         r["shard"]: r["cnt"]
@@ -579,7 +460,7 @@ def update_by_query(
     from pyspark.sql.window import Window
 
     from . import dsl as _dsl
-    from .build import append_documents, load_stats
+    from .build import append_documents
 
     stats = load_stats(index_dir)
     applied = bool(batch_tag) and batch_tag in stats.get("applied_batches", [])

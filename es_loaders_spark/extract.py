@@ -147,9 +147,16 @@ _PY_OPAQUE_NODES = ("MapInPandas", "MapInArrow", "EvalPython", "PythonUDTF")
 def _has_python_source(df) -> bool:
     """True when the input subtree contains an opaque Python node —
     re-scanning such a source re-runs the Python stage in full (no
-    column pruning reaches inside it)."""
-    plan = df._jdf.queryExecution().analyzed().toString()
-    return any(k in plan for k in _PY_OPAQUE_NODES)
+    column pruning reaches inside it). Matches plan node names, not the
+    plan's text, which also holds literals and column names."""
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        if any(k in node.nodeName() for k in _PY_OPAQUE_NODES):
+            return True
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return False
 
 
 def with_extracted_text(df, html_col: str = "html", out_col: str = "text"):

@@ -96,8 +96,6 @@ def tf_postings(
     index_dir: str,
     terms: list[str] | None = None,
     table: str = "shards",
-    prefix: str | None = None,
-    like_pattern: str | None = None,
     shards: list[int] | None = None,
     prefixes: list[str] | None = None,
     like_patterns: list[str] | None = None,
@@ -124,11 +122,9 @@ def tf_postings(
     conds = []
     if terms is not None:
         conds.append(F.col("term").isin(terms))
-    for p in ([prefix] if prefix is not None else []) + list(prefixes or []):
+    for p in prefixes or []:
         conds.append(F.col("term").startswith(p))
-    for pat in (
-        [like_pattern] if like_pattern is not None else []
-    ) + list(like_patterns or []):
+    for pat in like_patterns or []:
         # wildcard expansion: a LIKE over the term column (leading
         # wildcards scan the whole dictionary, same caveat as ES)
         conds.append(F.col("term").like(pat))

@@ -878,7 +878,7 @@ def execute_tree(
             if index_dir is not None:
                 from .phrase import tf_postings
 
-                src = tf_postings(spark, index_dir, prefix=l.value)
+                src = tf_postings(spark, index_dir, prefixes=[l.value])
             else:
                 src = p.filter(F.col("term").startswith(l.value))
             hits = (
@@ -893,7 +893,7 @@ def execute_tree(
             if index_dir is not None:
                 from .phrase import tf_postings
 
-                src = tf_postings(spark, index_dir, like_pattern=pat)
+                src = tf_postings(spark, index_dir, like_patterns=[pat])
             else:
                 src = p.filter(F.col("term").like(pat))
             hits = (

@@ -12,8 +12,8 @@ the driver-side thread pool that overlaps independent Spark jobs.
 from __future__ import annotations
 
 from collections import OrderedDict
-from concurrent.futures import ThreadPoolExecutor
-from typing import Any, Hashable
+from concurrent.futures import Future, ThreadPoolExecutor
+from typing import Any, Callable, Hashable
 
 from py4j.protocol import Py4JError
 from pyspark import SparkContext, StorageLevel
@@ -94,6 +94,31 @@ WARM_INDEXES = CachePool(cap=8)  # wand._WarmIndex per absolute index dir
 # mid-assignment re-samples its range boundaries and changes the ids
 ID_ASSIGNMENTS = CachePool(cap=None)
 
+
+class JobPool:
+    """Driver threads that overlap independent Spark jobs. A task runs
+    under the job description given at submit (None: no description) and
+    clears it afterwards: a pool thread's description is thread-local
+    Spark state, so a label left behind would name every later job that
+    thread runs."""
+
+    def __init__(self, max_workers: int):
+        self._pool = ThreadPoolExecutor(
+            max_workers=max_workers, thread_name_prefix="spark-aux"
+        )
+
+    def submit(self, fn: Callable, *args, label: str | None = None) -> Future:
+        def run():
+            sc = SparkContext._active_spark_context
+            sc.setJobDescription(label)
+            try:
+                return fn(*args)
+            finally:
+                sc.setJobDescription(None)
+
+        return self._pool.submit(run)
+
+
 # threads start on first submit; an orphaned future is just a Spark job
 # that completes, so nothing needs shutting down on error paths
-AUX_POOL = ThreadPoolExecutor(max_workers=4, thread_name_prefix="spark-aux")
+AUX_POOL = JobPool(max_workers=4)

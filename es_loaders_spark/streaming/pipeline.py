@@ -157,13 +157,12 @@ def stream_index_updates(
     idempotent per batch_tag, exactly like the index append, so a
     replayed micro-batch cannot double-count pairs.
     """
-    import json
     import os
 
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    from ..build import append_documents, build_index
+    from ..build import append_documents, build_index, load_stats
 
     def process_batch(batch_df: DataFrame, batch_id: int):
         if batch_df.isEmpty():
@@ -171,16 +170,11 @@ def stream_index_updates(
         spark = batch_df.sparkSession
         tag = f"batch-{batch_id}"
         stats_path = os.path.join(index_dir, "stats.json")
-        if os.path.exists(stats_path):
-            with open(stats_path) as f:
-                stats = json.load(f)
-            if tag in stats.get("applied_batches", []):
-                return  # replayed micro-batch: already applied, no-op
+        stats = load_stats(index_dir) if os.path.exists(stats_path) else {}
+        if tag in stats.get("applied_batches", []):
+            return  # replayed micro-batch: already applied, no-op
         if "doc_id" not in batch_df.columns:
-            base = -1
-            if os.path.exists(stats_path):
-                with open(stats_path) as f:
-                    base = int(json.load(f).get("max_doc_id", -1))
+            base = int(stats.get("max_doc_id", -1))
             # batch-local rank; batches are small enough for a single-task
             # window (micro-batch sized), large backfills use build_index
             rank = F.row_number().over(Window.orderBy("url")) - 1

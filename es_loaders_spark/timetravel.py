@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 
 from .analyze import tokenize_text
 from .bm25 import bm25_topk
-from .build import load_stats, union_parquet_dirs
+from .build import load_stats, term_dfs, union_parquet_dirs
 from .codec import decode_blocks_flat_batch
 from .deletes import filter_deleted
 from .postings import CorpusStats
@@ -97,13 +97,9 @@ def topk_as_of(
     shards = _gen_subset(spark, index_dir, "shards", g).filter(
         F.col("term").isin(terms)
     )
-    # as-of dfs: block-0 rows carry the per-(gen, term) df exactly as the
-    # terms-table rebuild sums them at append time (build.py)
-    tdf = (
-        shards.filter(F.col("block_id") == 0)
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"))
-    )
+    # as-of dfs: summed exactly as the terms-table rebuild sums them at
+    # append time
+    tdf = term_dfs(shards)
 
     def decode(batches):
         for pdf in batches:

@@ -112,15 +112,16 @@ def test_tf_postings_multi_selector_equals_union(spark, docs, tmp_path_factory):
     )
     got = {(r.term, r.doc_id, r.tf) for r in combined.collect()}
     want = set()
-    for kw in (dict(terms=terms), dict(prefix="batc"), dict(like_pattern="ke_")):
+    for kw in (dict(terms=terms), dict(prefixes=["batc"]), dict(like_patterns=["ke_"])):
         want |= {(r.term, r.doc_id, r.tf) for r in tf_postings(spark, idx, **kw).collect()}
     assert got == want and got
 
 
-def test_extraction_single_scan_matches_split(spark):
+def test_extraction_single_scan_matches_split(spark, tmp_path):
     """Opaque-source inputs take the single-scan CASE path; outputs must
     be byte-identical to the split path on the same rows."""
     import pandas as pd
+    from pyspark.sql import functions as F
 
     from es_loaders_spark.extract import (
         extract_text_bytes, with_extracted_text, _has_python_source,
@@ -150,6 +151,16 @@ def test_extraction_single_scan_matches_split(spark):
     assert not _has_python_source(table)
     got2 = {r.row_id: r.text for r in with_extracted_text(table).collect()}
     assert got2 == got
+
+    # a node name spelled as a literal is not a Python node: the parquet
+    # scan keeps the two-branch split
+    path = str(tmp_path / "html.parquet")
+    table.withColumn("tag", F.lit("html")).write.parquet(path)
+    literal = spark.read.parquet(path).filter(F.col("tag") != "MapInPandas")
+    assert not _has_python_source(literal)
+    split = with_extracted_text(literal)
+    assert "Union" in split._jdf.queryExecution().optimizedPlan().toString()
+    assert {r.row_id: r.text for r in split.collect()} == got
 
 
 def test_tracked_persist_pool_dedupes_and_caps(spark, docs):

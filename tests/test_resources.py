@@ -133,3 +133,20 @@ def test_session_restart_keeps_serving_and_releasing(tmp_path):
         cwd=REPO, env=env, capture_output=True, text=True, timeout=600,
     )
     assert proc.returncode == 0 and "RESTART OK" in proc.stdout, proc.stderr[-4000:]
+
+
+def test_aux_pool_jobs_carry_no_build_label(spark, tmp_path):
+    """build_index labels the jobs it runs on the shared driver pool; a
+    later job on those pool threads must not be reported under one of
+    them."""
+    from es_loaders_spark.resources import AUX_POOL
+
+    docs = spark.createDataFrame(ROWS, "doc_id long, text string")
+    build_index(spark, docs, str(tmp_path / "idx"), n_shards=2)
+    sc = spark.sparkContext
+    # the thread's description is the one Spark attaches to a job it submits
+    futures = [
+        AUX_POOL.submit(sc.getLocalProperty, "spark.job.description")
+        for _ in range(8)
+    ]
+    assert [f.result() for f in futures] == [None] * 8
